@@ -19,8 +19,10 @@ Layout
 ``operators/``   wordcount, relational query library, dedup, similarity,
                  text analysis, multimodal plumbing.
 ``sources/``     text lines + TPC-H-ish parquet table loaders.
-``sinks/``       Firestore batch/naive sink on ``foreachPartition`` with a
-                 pluggable (fake) client factory.
+``sinks/``       Firestore batch sink on ``mapInArrow`` (one client per
+                 partition, Arrow row handoff, commit totals returned) and
+                 the naive per-row oracle, with a pluggable (fake) client
+                 factory.
 ``functions/``   deterministic hashing + vector math built on pyspark.sql.functions.
 ``plans/``       explain-plan inspection helpers (pushdown/broadcast asserts).
 ``streaming/``   Structured Streaming replay + windowed/sessionized aggs.

@@ -24,6 +24,7 @@ from .operators.wordcount import word_count_pipeline
 from .session import build_session
 from .sinks.firestore import (
     FirestoreSinkConfig,
+    SinkTotals,
     fake_client_factory,
     write_word_counts_batch,
     write_word_counts_naive,
@@ -42,8 +43,12 @@ def run_pipeline(
     spark: SparkSession,
     config: PipelineConfig,
     client_factory: Callable[[], object] | None = None,
-) -> None:
-    """Build the lazy plan and execute it with the selected sink strategy."""
+) -> SinkTotals | None:
+    """Build the lazy plan and execute it with the selected sink strategy.
+
+    The batch sink returns (and this logs) what it committed, like the
+    reference's per-flush report (``FirestoreUpdateDoFn.java:83,92-93``);
+    the naive oracle reports nothing."""
     if client_factory is None:
         spool = tempfile.mkdtemp(prefix="firestore-spool-")
         logger.info("no Firestore client configured; spooling writes to %s", spool)
@@ -56,7 +61,16 @@ def run_pipeline(
         collection_path=config.collection_path,
         max_batch_size=config.firestore_max_batch_size,
     )
-    WRITERS[config.implementation](counts, sink_config, client_factory)
+    start = time.monotonic()
+    totals = WRITERS[config.implementation](counts, sink_config, client_factory)
+    if totals is not None:
+        logger.info(
+            "committed %d documents in %d commits in %.0f ms",
+            totals.documents,
+            totals.commits,
+            (time.monotonic() - start) * 1000,
+        )
+    return totals
 
 
 def main(argv: list[str] | None = None) -> None:

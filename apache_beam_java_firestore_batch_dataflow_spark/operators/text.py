@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.bloom import bloom_build, bloom_member
 from ..functions.numeric import round_ratio, round_ratio_sql
 from ..sources.tables import load_table
-from .wordcount import TOKENIZER_PATTERN
+from .wordcount import tokens_col
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 from ..registry import add as _registry_add
@@ -42,12 +42,6 @@ def register(name: str, oracle: str | None = None):
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
-
-
-def tokens_col(text: Column) -> Column:
-    """Array of non-empty word tokens — reference tokenizer semantics
-    (split on non-letters, keep case, drop empties; WordCount.java:45,66-73)."""
-    return F.filter(F.split(text, TOKENIZER_PATTERN), lambda t: F.length(t) > 0)
 
 
 # DuckDB fragment with identical semantics (RE2 also supports \p{L}).
@@ -1800,6 +1794,18 @@ def q_text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_TOP = 32  # merge-table prefix reported
 
+
+def _bpe_vocab(docs: DataFrame) -> DataFrame:
+    """(tok, cnt) over lower-cased tokens longer than one letter: the
+    vocabulary census every BPE entry starts from."""
+    toks = F.filter(tokens_col(F.lower(F.col("text"))), lambda t: F.length(t) > 1)
+    return (
+        docs.select(F.explode(toks).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 _BPE_MERGE_ORACLE = rf"""
     WITH toks AS (
       SELECT unnest(list_filter(
@@ -1846,18 +1852,7 @@ def q_text_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     `kmeans()`), which is exactly the representation (vocab word →
     freq) Sennrich et al.'s reference implementation iterates on."""
     docs = _docs(spark, sf_dir)
-    vocab = (
-        docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), TOKENIZER_PATTERN),
-                    lambda t: F.length(t) > 1,
-                )
-            ).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    vocab = _bpe_vocab(docs)
     pairs = vocab.select(
         F.explode(
             F.transform(
@@ -2012,18 +2007,7 @@ def q_text_bpe_apply_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected), and each round is two combiner aggs — k merge rounds =
     the `kmeans()` checkpoint loop."""
     docs = _docs(spark, sf_dir)
-    vocab = (
-        docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), TOKENIZER_PATTERN),
-                    lambda t: F.length(t) > 1,
-                )
-            ).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    vocab = _bpe_vocab(docs)
 
     def pair_census(v: DataFrame) -> DataFrame:
         return (
@@ -2176,15 +2160,18 @@ def bpe_train(
     # JVM VALUES relation, not createDataFrame(list): the latter routes
     # through a parallelized Python RDD, so every downstream action
     # would pay a ~0.2 s Python-worker stage for 4 rows.  Pairs are
-    # tokenizer output ([a-z] + private-use merge symbols); the quote
-    # escape keeps the literal well-formed for any string.
+    # tokenizer output for the registered entries, but any vocabulary
+    # may be passed in: Spark string literals treat backslash as the
+    # escape character, so it is escaped first, then the quote.
     if not winners:
         return spark.sql(
             "SELECT CAST(NULL AS INT) AS round, CAST(NULL AS STRING) AS pair,"
             " CAST(NULL AS BIGINT) AS n WHERE FALSE"
         )
     rows_sql = ", ".join(
-        "({r}, '{p}', {n}L)".format(r=r, p=p.replace("'", "''"), n=n)
+        "({r}, '{p}', {n}L)".format(
+            r=r, p=p.replace("\\", "\\\\").replace("'", "''"), n=n
+        )
         for r, p, n in winners
     )
     return spark.sql(
@@ -2254,18 +2241,7 @@ def q_text_bpe_train_k4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc_id, text) exchange cost more than the parallel census saved
     # (build ~2.0 s with spread vs ~1.0 s without, measured min-of-5).
     docs = _docs(spark, sf_dir)
-    vocab = (
-        docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), TOKENIZER_PATTERN),
-                    lambda t: F.length(t) > 1,
-                )
-            ).alias("tok")
-        )
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    vocab = _bpe_vocab(docs)
     return bpe_train(vocab, k=BPE_TRAIN_K)
 
 

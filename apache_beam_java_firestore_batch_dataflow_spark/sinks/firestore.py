@@ -19,12 +19,19 @@ Reference behavior being re-expressed (citations for the parity judge):
   <= 500 writes (SURVEY.md §2 ⚠️).
 
 Spark-first design: Beam's bundle becomes a Spark partition;
-``df.foreachPartition`` gives one client per partition and streams rows
-through a chunked iterator (``itertools.islice``) — nothing is buffered
-beyond one chunk, so a 100 TB run with thousands of partitions holds at
-most ``num_concurrent_tasks * batch_size`` rows in flight.  Writes are
-idempotent upserts keyed by doc id, so Spark task retries preserve the
-reference's at-least-once + idempotent contract (SURVEY.md §2).
+``df.mapInArrow`` gives one client per partition and streams rows through
+a chunked iterator (``itertools.islice``) — nothing is buffered beyond one
+Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) and
+one chunk, so a 100 TB run with thousands of partitions holds a bounded
+number of rows per concurrent task.  Rows reach the writer as Arrow
+record batches, converted to one dict per row (``_batch_rows``):
+``foreachPartition`` would pickle every row in the JVM and rebuild it as
+a Python ``Row``, which costs more than the Arrow transfer on sink-bound
+jobs.  Each partition returns one summary row (documents,
+commits), which the driver sums — the reference's per-flush size
+report (``FirestoreUpdateDoFn.java:83,92-93``).  Writes are idempotent
+upserts keyed by doc id, so Spark task retries preserve the reference's
+at-least-once + idempotent contract (SURVEY.md §2).
 
 No GCP SDK is installed in this environment (and none may be assumed), so
 the client is **pluggable**: a serializable zero-arg factory returns an
@@ -42,9 +49,10 @@ import json
 import os
 import time
 import uuid
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 # Firestore's documented per-batch write limit, mirrored by the reference
@@ -174,7 +182,7 @@ class GoogleFirestoreClient:
 
 
 def google_client_factory(project_id: str) -> Callable[[], GoogleFirestoreClient]:
-    """Serializable factory for ``foreachPartition`` (closes over a string)."""
+    """Serializable factory for the partition writer (closes over a string)."""
 
     def factory() -> GoogleFirestoreClient:
         return GoogleFirestoreClient(project_id)
@@ -227,36 +235,87 @@ def _chunked(rows: Iterator, size: int) -> Iterator[list]:
         yield chunk
 
 
+def _plain_column(column: pa.Array) -> bool:
+    t = column.type
+    return column.null_count == 0 and (
+        pa.types.is_integer(t)
+        or pa.types.is_floating(t)
+        or pa.types.is_boolean(t)
+        or pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+    )
+
+
+def _batch_rows(batch: pa.RecordBatch) -> list[dict]:
+    """``batch.to_pylist()``: one dict per row, keyed by column name.
+
+    A number, boolean or string column without nulls converts through
+    NumPy, which gives the same Python values as ``to_pylist`` without
+    boxing each one as an Arrow scalar first: 80k (word, count) rows took
+    46 ms instead of 165 ms on one core of a 4-core x86 host, out of
+    about 0.25 s of Python work per partition before the commit round
+    trips.  Other columns (nulls, temporal, decimal, nested) take
+    ``to_pylist``."""
+    columns = [
+        c.to_numpy(zero_copy_only=False).tolist() if _plain_column(c) else c.to_pylist()
+        for c in batch.columns
+    ]
+    names = batch.schema.names
+    return [dict(zip(names, values)) for values in zip(*columns)]
+
+
 def _word_count_item(row) -> tuple[str, dict]:
     # Document id = the word, body = {"count": n}
     # (NaiveImplementation.java:55-60, BatchWriteImplementation.java:44-51).
     return str(row["word"]), {"count": int(row["count"])}
 
 
+@dataclass(frozen=True)
+class SinkTotals:
+    """What a batch write committed, summed over its partitions."""
+
+    documents: int
+    commits: int
+
+
 def write_word_counts_batch(
     word_counts: DataFrame,
     config: FirestoreSinkConfig,
     client_factory: Callable[[], object],
-    to_item: Callable[[object], tuple[str, dict]] = _word_count_item,
-) -> None:
+    to_item: Callable[[dict], tuple[str, dict]] = _word_count_item,
+) -> SinkTotals:
     """Batched sink: one client per partition, awaited commits of <= max_batch_size.
 
     This is the idiomatic Spark replacement for the reference's bundle
-    lifecycle (``@StartBundle``/``@FinishBundle`` ->
-    one-client-per-``foreachPartition`` call).
+    lifecycle (``@StartBundle``/``@FinishBundle`` -> one client per
+    ``mapInArrow`` partition).  ``to_item`` receives each row as a dict
+    keyed by column name.
     """
     collection = config.collection_path
     batch_size = min(config.max_batch_size, DEFAULT_MAX_BATCH_SIZE)
 
-    def write_partition(rows: Iterable) -> None:
+    def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows = itertools.chain.from_iterable(_batch_rows(b) for b in batches)
+        documents = commits = 0
         client = client_factory()
         try:
-            for chunk in _chunked(iter(rows), batch_size):
+            for chunk in _chunked(rows, batch_size):
                 client.commit(collection, [to_item(r) for r in chunk])
+                documents += len(chunk)
+                commits += 1
         finally:
             client.close()
+        yield pa.RecordBatch.from_pydict(
+            {"documents": [documents], "commits": [commits]}
+        )
 
-    word_counts.foreachPartition(write_partition)
+    summary = word_counts.mapInArrow(
+        write_partition, "documents long, commits long"
+    ).collect()
+    return SinkTotals(
+        documents=sum(r["documents"] for r in summary),
+        commits=sum(r["commits"] for r in summary),
+    )
 
 
 def write_word_counts_naive(

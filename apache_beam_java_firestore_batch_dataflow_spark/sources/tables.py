@@ -8,6 +8,7 @@ shows ``PushedFilters``/narrow ``ReadSchema`` (see plans/explain.py).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -121,9 +122,24 @@ def spread_scan(
     already-splittable and ``df`` is returned untouched — the rule may
     only ever ADD parallelism it can prove is missing, never a corpus
     shuffle (or a crash) on inputs it cannot inspect."""
+    return spread_if_narrow(
+        df, spark, lambda: scan_data_splits(sf_dir, name), key
+    )
+
+
+def spread_if_narrow(
+    df: DataFrame, spark: SparkSession, count_splits: Callable[[], int],
+    key: str | None = None,
+) -> DataFrame:
+    """The spread decision every scan shares: repartition ``df`` to
+    ``defaultParallelism`` (hash on ``key``, else round-robin) when
+    ``count_splits()`` says the scan yields fewer splits than that;
+    return it untouched when it already has enough, when the count is 0
+    (nothing visible to spread), or when the count raises (the input
+    cannot be inspected — fail open)."""
     cores = spark.sparkContext.defaultParallelism
     try:
-        splits = scan_data_splits(sf_dir, name)
+        splits = count_splits()
     except Exception:  # noqa: BLE001 — uninspectable input: fail open
         return df
     if splits == 0 or splits >= cores:

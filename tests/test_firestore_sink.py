@@ -197,3 +197,134 @@ def test_google_adapter_requires_sdk_without_injection():
 
     with pytest.raises(RuntimeError, match="google-cloud-firestore"):
         GoogleFirestoreClient("demo-proj")
+
+
+# ---------------------------------------------------------------------------
+# What the batch sink reports (FirestoreUpdateDoFn.java:83,92-93 parity)
+# ---------------------------------------------------------------------------
+
+
+def _marking_factory(spool_dir, marks_dir):
+    """Fake-client factory that drops an ``open-<id>`` file when it builds
+    a client and a ``close-<id>`` file when that client is closed, so a
+    test can check from the driver that every client the sink opened in a
+    Python worker was closed."""
+    inner = fake_client_factory(spool_dir)
+
+    def factory():
+        import os
+        import uuid
+
+        client = inner()
+        cid = uuid.uuid4().hex
+        open(os.path.join(marks_dir, f"open-{cid}"), "w").close()
+        close = client.close
+
+        def close_and_mark():
+            close()
+            open(os.path.join(marks_dir, f"close-{cid}"), "w").close()
+
+        client.close = close_and_mark
+        return client
+
+    return factory
+
+
+def _marks(marks_dir, kind):
+    return sorted(p.name.split("-", 1)[1] for p in marks_dir.glob(f"{kind}-*"))
+
+
+def test_batch_sink_returns_totals_over_partitions(spark, tmp_path):
+    pairs = [(f"w{i}", i) for i in range(1, 121)]
+    df = counts_df(spark, pairs).repartition(3)
+    assert df.rdd.getNumPartitions() == 3
+    totals = write_word_counts_batch(
+        df, make_sink_config(batch_size=25), fake_client_factory(str(tmp_path))
+    )
+    batches = read_fake_batches(str(tmp_path))
+    assert totals.documents == 120 == sum(b["batch_size"] for b in batches)
+    assert totals.commits == len(batches)
+    # every partition pays its own final partial chunk: 120/25 rounds up
+    # to 5 commits in one partition, and three partitions need more
+    assert totals.commits > 5
+
+
+def test_batch_sink_custom_to_item_through_arrow(spark, tmp_path):
+    """Streaming's windowed item reads three columns by name from the
+    dicts the Arrow handoff produces."""
+    from apache_beam_java_firestore_batch_dataflow_spark.streaming.pipeline import (
+        _windowed_count_item,
+    )
+
+    rows = [
+        ("2024-01-01 00:00:00", "hi", 3),
+        ("2024-01-01 01:00:00", "hi", 1),
+        ("2024-01-01 00:00:00", "sue", 2),
+    ]
+    df = spark.createDataFrame(rows, "window_start string, word string, count long")
+    totals = write_word_counts_batch(
+        df.repartition(2),
+        make_sink_config(),
+        fake_client_factory(str(tmp_path)),
+        to_item=_windowed_count_item,
+    )
+    assert totals.documents == 3
+    state = read_fake_firestore_state(str(tmp_path))["kinglear.txt"]
+    assert state == {
+        f"{ws}|{w}": {"window_start": ws, "word": w, "count": n} for ws, w, n in rows
+    }
+
+
+def test_batch_sink_empty_frame_commits_nothing_and_closes(spark, tmp_path):
+    spool, marks = tmp_path / "spool", tmp_path / "marks"
+    spool.mkdir()
+    marks.mkdir()
+    pairs = [(f"w{i}", i) for i in range(1, 41)]
+    # a row filter Catalyst cannot fold away keeps the partitions, empty
+    empty = counts_df(spark, pairs).repartition(3).filter("count < 0")
+    totals = write_word_counts_batch(
+        empty, make_sink_config(), _marking_factory(str(spool), str(marks))
+    )
+    assert (totals.documents, totals.commits) == (0, 0)
+    assert read_fake_batches(str(spool)) == []
+    opened = _marks(marks, "open")
+    assert opened, "the sink opens a client per partition"
+    assert _marks(marks, "close") == opened
+
+
+def test_batch_rows_equal_to_pylist():
+    """The sink's Arrow row conversion gives exactly ``to_pylist()``:
+    same values and Python types, for columns it converts through NumPy
+    and for those with nulls or other types that it hands to Arrow."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+
+    from apache_beam_java_firestore_batch_dataflow_spark.sinks.firestore import (
+        _batch_rows,
+    )
+
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "word": ["hi", "", "wörld"],
+            "large": pa.array(["a", "b", "c"], pa.large_string()),
+            "i8": pa.array([1, -2, 3], pa.int8()),
+            "u64": pa.array([0, 2**64 - 1, 5], pa.uint64()),
+            "count": [5, 2, 2**40],
+            "f32": pa.array([0.5, 1.25, -3.0], pa.float32()),
+            "f64": [0.1, float("inf"), -0.0],
+            "flag": [True, False, True],
+            "null_int": [1, None, 3],
+            "null_str": ["x", None, "z"],
+            "ts": pa.array(
+                [datetime.datetime(2024, 1, 1, 12)] * 3, pa.timestamp("us", tz="UTC")
+            ),
+            "dec": pa.array([decimal.Decimal("1.50")] * 3, pa.decimal128(5, 2)),
+            "tags": [["a"], [], ["b", "c"]],
+        }
+    )
+    got, want = _batch_rows(batch), batch.to_pylist()
+    assert got == want
+    for g, w in zip(got, want):
+        assert {k: type(v) for k, v in g.items()} == {k: type(v) for k, v in w.items()}

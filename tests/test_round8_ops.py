@@ -94,6 +94,26 @@ def test_bpe_train_learns_compound_merges(spark, sf_dir):
     spark.catalog.clearCache()
 
 
+def test_bpe_train_pairs_with_backslash_and_quote(spark):
+    """Merge pairs go back to Spark as a VALUES literal; a backslash in a
+    pair must survive it (it is Spark's escape character), as must a
+    quote and the two together."""
+    from apache_beam_java_firestore_batch_dataflow_spark.operators.text import (
+        bpe_train,
+    )
+
+    vocab = Counter({"a\\b": 7, "x'y": 5, "\\'": 3, "q\\\\": 2})
+    sdf = spark.createDataFrame(list(vocab.items()), ["tok", "cnt"])
+    got = [
+        (r.round, r.pair, r.n)
+        for r in bpe_train(sdf, k=7).orderBy("round").collect()
+    ]
+    assert got == _py_bpe_train(vocab, k=7)
+    # "\b" would read back as a backspace, "\'" would end the literal
+    assert {"\\b", "\\'", "\\\\"} <= {pair for _, pair, _ in got}
+    spark.catalog.clearCache()
+
+
 def test_kcore_peel_removes_weak_nodes_keeps_core(spark):
     """Triangle + pendant chain: one peel at k=2 drops the chain tail,
     two peels drop the whole chain; the triangle survives with residual

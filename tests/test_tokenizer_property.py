@@ -1,4 +1,5 @@
-"""Property test: the Spark tokenizer (Java regex ``[^\\p{L}]+``, reference
+"""Property test: the production tokenizer ``tokens_col`` (maximal runs of
+``\\p{L}``, the complement of the reference separator ``[^\\p{L}]+``,
 WordCount.java:45) agrees with an independent Unicode-category oracle on
 arbitrary mixed-script input, and never emits empty tokens."""
 
@@ -11,7 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from apache_beam_java_firestore_batch_dataflow_spark.operators.wordcount import (
-    TOKENIZER_PATTERN,
+    tokens_col,
 )
 
 # Scripts whose letter-category assignment is stable across Unicode
@@ -58,11 +59,7 @@ def test_tokenizer_matches_unicode_oracle(spark, lines):
     df = spark.createDataFrame([(l,) for l in lines], "value string")
     got = [
         r["toks"]
-        for r in df.select(
-            F.filter(
-                F.split("value", TOKENIZER_PATTERN), lambda t: F.length(t) > 0
-            ).alias("toks")
-        ).collect()
+        for r in df.select(tokens_col(F.col("value")).alias("toks")).collect()
     ]
     want = [oracle_tokens(l) for l in lines]
     assert got == want

@@ -66,6 +66,21 @@ def test_tokenizer_edge_cases(spark):
         assert sorted(r.word for r in out.collect()) == sorted(expected), line
 
 
+def test_tokens_col_null_and_empty(spark):
+    """NULL text stays NULL (explode drops the line) and "" has no tokens,
+    as with the reference split-and-drop-empties."""
+    from pyspark.sql import functions as F
+
+    from apache_beam_java_firestore_batch_dataflow_spark.operators.wordcount import (
+        tokens_col,
+    )
+
+    df = spark.createDataFrame([(None,), ("",), ("--",)], "value string")
+    got = [r.t for r in df.select(tokens_col(F.col("value")).alias("t")).collect()]
+    assert got == [None, [], []]
+    assert extract_words(df).count() == 0
+
+
 def test_observe_metrics(spark):
     """emptyLines counter + lineLenDistro parity (WordCount.java:54-63) via
     df.observe — computed in the same pass as the aggregation."""
