@@ -24,14 +24,14 @@ a chunked iterator (``itertools.islice``) — nothing is buffered beyond one
 Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) and
 one chunk, so a 100 TB run with thousands of partitions holds a bounded
 number of rows per concurrent task.  Rows reach the writer as Arrow
-record batches, converted to one dict per row (``_batch_rows``):
-``foreachPartition`` would pickle every row in the JVM and rebuild it as
-a Python ``Row``, which costs more than the Arrow transfer on sink-bound
-jobs.  Each partition returns one summary row (documents,
-commits), which the driver sums — the reference's per-flush size
-report (``FirestoreUpdateDoFn.java:83,92-93``).  Writes are idempotent
-upserts keyed by doc id, so Spark task retries preserve the reference's
-at-least-once + idempotent contract (SURVEY.md §2).
+record batches, converted to one dict per row by
+``RecordBatch.to_pylist()``: ``foreachPartition`` would pickle every row
+in the JVM and rebuild it as a Python ``Row``, which costs more than the
+Arrow transfer on sink-bound jobs.  Each partition returns one summary
+row (documents, commits), which the driver sums — the reference's
+per-flush size report (``FirestoreUpdateDoFn.java:83,92-93``).  Writes
+are idempotent upserts keyed by doc id, so Spark task retries preserve
+the reference's at-least-once + idempotent contract (SURVEY.md §2).
 
 No GCP SDK is installed in this environment (and none may be assumed), so
 the client is **pluggable**: a serializable zero-arg factory returns an
@@ -235,35 +235,6 @@ def _chunked(rows: Iterator, size: int) -> Iterator[list]:
         yield chunk
 
 
-def _plain_column(column: pa.Array) -> bool:
-    t = column.type
-    return column.null_count == 0 and (
-        pa.types.is_integer(t)
-        or pa.types.is_floating(t)
-        or pa.types.is_boolean(t)
-        or pa.types.is_string(t)
-        or pa.types.is_large_string(t)
-    )
-
-
-def _batch_rows(batch: pa.RecordBatch) -> list[dict]:
-    """``batch.to_pylist()``: one dict per row, keyed by column name.
-
-    A number, boolean or string column without nulls converts through
-    NumPy, which gives the same Python values as ``to_pylist`` without
-    boxing each one as an Arrow scalar first: 80k (word, count) rows took
-    46 ms instead of 165 ms on one core of a 4-core x86 host, out of
-    about 0.25 s of Python work per partition before the commit round
-    trips.  Other columns (nulls, temporal, decimal, nested) take
-    ``to_pylist``."""
-    columns = [
-        c.to_numpy(zero_copy_only=False).tolist() if _plain_column(c) else c.to_pylist()
-        for c in batch.columns
-    ]
-    names = batch.schema.names
-    return [dict(zip(names, values)) for values in zip(*columns)]
-
-
 def _word_count_item(row) -> tuple[str, dict]:
     # Document id = the word, body = {"count": n}
     # (NaiveImplementation.java:55-60, BatchWriteImplementation.java:44-51).
@@ -295,7 +266,7 @@ def write_word_counts_batch(
     batch_size = min(config.max_batch_size, DEFAULT_MAX_BATCH_SIZE)
 
     def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rows = itertools.chain.from_iterable(_batch_rows(b) for b in batches)
+        rows = itertools.chain.from_iterable(b.to_pylist() for b in batches)
         documents = commits = 0
         client = client_factory()
         try:

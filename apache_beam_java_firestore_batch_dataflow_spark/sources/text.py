@@ -10,10 +10,12 @@ a 100 TB text corpus parallelizes across executors with no extra code.
 Small inputs are the exception: Spark never makes a split smaller than
 ``spark.sql.files.openCostInBytes`` (4 MiB by default), so a 4 MiB file
 plans 2 splits and tokenizing it would use 2 of 4 cores.  ``read_lines``
-therefore hash-repartitions on ``value`` to ``defaultParallelism`` when
-the scan provably plans fewer splits than that, and otherwise returns
-the scan untouched (no Exchange) — the rule ``sources.tables.spread_scan``
-applies to parquet tables, failing open the same way.
+therefore round-robin repartitions to ``defaultParallelism`` when the
+scan plans fewer splits than that, and otherwise returns the scan
+untouched (no Exchange) — the rule ``sources.tables.spread_scan``
+applies to parquet tables, failing open the same way.  Round-robin, not
+a hash of the line: text repeats (blank lines, boilerplate, log lines),
+and every copy of a line would hash to the same partition.
 """
 
 from __future__ import annotations
@@ -23,26 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from .tables import spread_if_narrow
 
 
-def text_scan_splits_bound(lines: DataFrame) -> int:
-    """Upper bound on the splits Spark plans for a file scan: each file
-    is cut into pieces of at most Spark's own ``maxSplitBytes``, so there
-    are at most ``files + bytes // maxSplitBytes`` pieces, and packing
-    pieces into splits never adds any.  Exact for one file whose size is
-    not a multiple of the split size.  Reads the planned file listing
-    only; building the scan's RDD instead (``rdd.getNumPartitions()``)
-    broadcasts the Hadoop configuration and costs several times more.
-    Raises if the plan is not a bare file scan."""
-    session = lines.sparkSession
-    listing = lines._jdf.queryExecution().executedPlan().selectedPartitions()
-    datasources = session._jvm.org.apache.spark.sql.execution.datasources
-    max_split = datasources.FilePartition.maxSplitBytes(session._jsparkSession, listing)
-    return listing.totalNumberOfFiles() + listing.totalFileSize() // max_split
-
-
 def read_lines(spark: SparkSession, path: str) -> DataFrame:
     """One row per line: DataFrame[value: string], spread over every core
     when the scan alone would leave some idle (see the module docstring)."""
     lines = spark.read.text(path)
-    return spread_if_narrow(
-        lines, spark, lambda: text_scan_splits_bound(lines), key="value"
-    )
+    return spread_if_narrow(lines, spark, lambda: lines.rdd.getNumPartitions())

@@ -290,41 +290,3 @@ def test_batch_sink_empty_frame_commits_nothing_and_closes(spark, tmp_path):
     opened = _marks(marks, "open")
     assert opened, "the sink opens a client per partition"
     assert _marks(marks, "close") == opened
-
-
-def test_batch_rows_equal_to_pylist():
-    """The sink's Arrow row conversion gives exactly ``to_pylist()``:
-    same values and Python types, for columns it converts through NumPy
-    and for those with nulls or other types that it hands to Arrow."""
-    import datetime
-    import decimal
-
-    import pyarrow as pa
-
-    from apache_beam_java_firestore_batch_dataflow_spark.sinks.firestore import (
-        _batch_rows,
-    )
-
-    batch = pa.RecordBatch.from_pydict(
-        {
-            "word": ["hi", "", "wörld"],
-            "large": pa.array(["a", "b", "c"], pa.large_string()),
-            "i8": pa.array([1, -2, 3], pa.int8()),
-            "u64": pa.array([0, 2**64 - 1, 5], pa.uint64()),
-            "count": [5, 2, 2**40],
-            "f32": pa.array([0.5, 1.25, -3.0], pa.float32()),
-            "f64": [0.1, float("inf"), -0.0],
-            "flag": [True, False, True],
-            "null_int": [1, None, 3],
-            "null_str": ["x", None, "z"],
-            "ts": pa.array(
-                [datetime.datetime(2024, 1, 1, 12)] * 3, pa.timestamp("us", tz="UTC")
-            ),
-            "dec": pa.array([decimal.Decimal("1.50")] * 3, pa.decimal128(5, 2)),
-            "tags": [["a"], [], ["b", "c"]],
-        }
-    )
-    got, want = _batch_rows(batch), batch.to_pylist()
-    assert got == want
-    for g, w in zip(got, want):
-        assert {k: type(v) for k, v in g.items()} == {k: type(v) for k, v in w.items()}

@@ -1,6 +1,6 @@
 """Scan-spread gates for the reference word-count source.
 
-``sources.text.read_lines`` hash-repartitions a text scan that plans
+``sources.text.read_lines`` round-robin repartitions a text scan that plans
 fewer splits than ``defaultParallelism`` (Spark never makes a split
 smaller than ``spark.sql.files.openCostInBytes``, so a small file scans
 in one or two tasks) and leaves every other scan untouched.  These tests
@@ -13,10 +13,7 @@ from __future__ import annotations
 from apache_beam_java_firestore_batch_dataflow_spark.sources.tables import (
     spread_if_narrow,
 )
-from apache_beam_java_firestore_batch_dataflow_spark.sources.text import (
-    read_lines,
-    text_scan_splits_bound,
-)
+from apache_beam_java_firestore_batch_dataflow_spark.sources.text import read_lines
 
 
 def _plan(df) -> str:
@@ -35,8 +32,20 @@ def test_single_small_file_is_spread_over_every_core(spark, tmp_path):
     assert spark.read.text(str(f)).rdd.getNumPartitions() == 1
     lines = read_lines(spark, str(f))
     assert lines.rdd.getNumPartitions() == cores
-    assert "Exchange hashpartitioning(value" in _plan(lines)
+    assert "Exchange RoundRobinPartitioning" in _plan(lines)
     assert lines.count() == 500
+
+
+def test_repeated_lines_reach_every_partition(spark, tmp_path):
+    """A line repeated throughout a file must not pile up in one task,
+    as it would under a hash of the line."""
+    cores = spark.sparkContext.defaultParallelism
+    f = tmp_path / "repeated.txt"
+    f.write_text("the same log line\n" * 400)
+    sizes = read_lines(spark, str(f)).rdd.glom().map(len).collect()
+    assert len(sizes) == cores
+    assert sum(sizes) == 400
+    assert min(sizes) > 0
 
 
 def test_scan_with_enough_splits_gets_no_exchange(spark, tmp_path):
@@ -48,19 +57,6 @@ def test_scan_with_enough_splits_gets_no_exchange(spark, tmp_path):
     lines = read_lines(spark, str(tmp_path))
     assert "Exchange" not in _plan(lines)
     assert lines.count() == 50 * cores
-
-
-def test_split_bound_never_undercounts(spark, tmp_path):
-    """The bound may only overstate the planned splits — so the spread
-    never fires on a scan that already fills the cores."""
-    (tmp_path / "one").mkdir()
-    _write_lines(tmp_path / "one" / "a.txt", 100)
-    (tmp_path / "many").mkdir()
-    for i in range(6):
-        _write_lines(tmp_path / "many" / f"p{i}.txt", 20)
-    for path in (tmp_path / "one", tmp_path / "many"):
-        scan = spark.read.text(str(path))
-        assert text_scan_splits_bound(scan) >= scan.rdd.getNumPartitions()
 
 
 def test_spread_if_narrow_fails_open(spark):
