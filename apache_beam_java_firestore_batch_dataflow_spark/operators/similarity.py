@@ -1948,35 +1948,50 @@ def _knn_exact_pairs_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_norm = np.array([r["vnorm"] for r in qrows], dtype=np.float64)
     bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
     k = KNN_K
+    ansi = spark.conf.get("spark.sql.ansi.enabled") == "true"
 
     def exact_topk_per_batch(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         q_ids, q_mat, q_norm = bq.value
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            ids = batch.column("vec_id").to_numpy()
             x = np.stack(
-                [np.asarray(e, dtype=np.float64) for e in pdf["embedding"]]
+                [
+                    np.asarray(e, dtype=np.float64)
+                    for e in batch.column("embedding").to_numpy(zero_copy_only=False)
+                ]
             )
-            xn = pdf["vnorm"].to_numpy(dtype=np.float64)
-            sims = _pairwise_sims(x, xn, q_mat, q_norm)  # batch × queries
+            xn = batch.column("vnorm").to_numpy()
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = _pairwise_sims(x, xn, q_mat, q_norm)  # batch × queries
             self_mask = ids[:, None] == q_ids[None, :]
-            neg = np.where(self_mask, np.inf, -sims)  # self-pairs last
+            # Spark's x / 0 is DIVIDE_BY_ZERO under ANSI, else NULL, which
+            # DESC ranks last; a NaN sim (NaN component) DESC ranks first.
+            by_zero = (xn[:, None] * q_norm[None, :] == 0) & ~self_mask
+            if ansi and by_zero.any():
+                raise ArithmeticError(
+                    "[DIVIDE_BY_ZERO] Division by zero: zero-norm embedding"
+                )
+            neg = np.where(np.isnan(sims), -np.inf, -sims)
+            neg[self_mask | by_zero] = np.inf  # self-pairs and NULLs last
             kk = min(k, len(ids))
             kth = np.partition(neg, kk - 1, axis=0)[kk - 1]  # per query
             keep = (neg <= kth[None, :]) & ~self_mask
             rows, cols = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[cols],
-                    "neighbor_id": ids[rows],
-                    "sim": sims[rows, cols],
-                }
+            # pa.array keeps NaN a value; pandas would have turned it NULL.
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(q_ids[cols]),
+                    pa.array(ids[rows]),
+                    pa.array(sims[rows, cols], mask=by_zero[rows, cols]),
+                ],
+                names=["query_id", "neighbor_id", "sim"],
             )
 
-    partial = v.mapInPandas(
+    partial = v.mapInArrow(
         exact_topk_per_batch, schema="query_id long, neighbor_id long, sim double"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))

@@ -235,7 +235,7 @@ def _chunked(rows: Iterator, size: int) -> Iterator[list]:
         yield chunk
 
 
-def _word_count_item(row) -> tuple[str, dict]:
+def word_count_item(row) -> tuple[str, dict]:
     # Document id = the word, body = {"count": n}
     # (NaiveImplementation.java:55-60, BatchWriteImplementation.java:44-51).
     return str(row["word"]), {"count": int(row["count"])}
@@ -253,7 +253,7 @@ def write_word_counts_batch(
     word_counts: DataFrame,
     config: FirestoreSinkConfig,
     client_factory: Callable[[], object],
-    to_item: Callable[[dict], tuple[str, dict]] = _word_count_item,
+    to_item: Callable[[dict], tuple[str, dict]] = word_count_item,
 ) -> SinkTotals:
     """Batched sink: one client per partition, awaited commits of <= max_batch_size.
 
@@ -293,7 +293,7 @@ def write_word_counts_naive(
     word_counts: DataFrame,
     config: FirestoreSinkConfig,
     client_factory: Callable[[], object],
-    to_item: Callable[[object], tuple[str, dict]] = _word_count_item,
+    to_item: Callable[[object], tuple[str, dict]] = word_count_item,
 ) -> None:
     """Naive sink oracle: a fresh client and a blocking single-write commit
     **per element** (NaiveImplementation.java:49-60).  Exists to preserve the

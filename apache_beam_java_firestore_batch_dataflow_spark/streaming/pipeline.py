@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.text import tokens_col
-from ..sinks.firestore import FirestoreSinkConfig, write_word_counts_batch
+from ..sinks.firestore import FirestoreSinkConfig
+from .sink import stream_word_counts_writer
 
 
 def kafka_windowed_wordcount(
@@ -79,15 +80,7 @@ def stream_windowed_counts_writer(
 ) -> DataStreamWriter:
     """Build (don't start) the foreachBatch writer for the windowed
     count — each trigger's changed rows go through the chunked batch
-    path with one client per partition."""
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_word_counts_batch(
-            batch_df, config, client_factory, to_item=_windowed_count_item
-        )
-
-    return (
-        counted.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle_batch)
+    path with one client per partition, logged per ``batch_id``."""
+    return stream_word_counts_writer(
+        counted, config, client_factory, checkpoint_dir, to_item=_windowed_count_item
     )

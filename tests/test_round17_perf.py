@@ -204,3 +204,62 @@ def test_recall_ground_truth_matches_bruteforce(spark, sf_dir):
     finally:
         spark.conf.set(key, saved) if saved is not None else spark.conf.unset(key)
     spark.catalog.clearCache()
+
+
+def test_recall_ground_truth_matches_bruteforce_on_degenerate_vectors(
+    spark, sf_dir, tmp_path
+):
+    """ADVICE r17: the per-batch prune dropped NaN sims (``NaN <= kth`` is
+    False) that Spark's DESC ordering ranks first, and the pandas handoff
+    turned NaN into NULL.  A NaN component (as neighbour and as query)
+    must give q_knn_bruteforce's rowset; a zero-norm vector must raise
+    DIVIDE_BY_ZERO under ANSI like the reference, and rank last as NULL
+    without it."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from apache_beam_java_firestore_batch_dataflow_spark.operators.similarity import (
+        _knn_exact_pairs_vectorized,
+        q_knn_bruteforce,
+    )
+
+    table = pq.read_table(f"{sf_dir}/embeddings.parquet")
+
+    def fixture(name, vec_id, value):
+        rows = table.to_pylist()
+        for r in rows:
+            if r["vec_id"] == vec_id:
+                r["embedding"] = [value] * len(r["embedding"])
+        out = tmp_path / name
+        out.mkdir()
+        pq.write_table(pa.Table.from_pylist(rows, schema=table.schema),
+                       out / "embeddings.parquet")
+        return str(out)
+
+    def rowset(df):
+        return sorted(
+            (r.query_id, r.neighbor_id, r.rank,
+             "NaN" if r.cosine is not None and math.isnan(r.cosine) else r.cosine)
+            for r in df.collect()
+        )
+
+    for d in (fixture("nan_neighbor", 7, math.nan), fixture("nan_query", 20, math.nan)):
+        ref = rowset(q_knn_bruteforce(spark, d))
+        assert any(c == "NaN" for *_, c in ref)  # the degenerate rows rank in
+        assert rowset(_knn_exact_pairs_vectorized(spark, d)) == ref
+
+    zero = fixture("zero_norm", 7, 0.0)
+    for query in (q_knn_bruteforce, _knn_exact_pairs_vectorized):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            query(spark, zero).collect()
+    saved = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        ref = rowset(q_knn_bruteforce(spark, zero))
+        assert rowset(_knn_exact_pairs_vectorized(spark, zero)) == ref
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", saved)
+    spark.catalog.clearCache()

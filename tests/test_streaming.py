@@ -6,6 +6,7 @@ Firestore sink (streaming reuse of the reference's batched sink).
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,10 +135,18 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert emitted["2024-06-01 10:30:00"] == 1
 
 
-def test_streaming_firestore_sink(spark, tmp_path):
+def test_streaming_firestore_sink(spark, tmp_path, caplog):
     """Streaming word count → foreachBatch → batched Firestore writes:
     upsert-by-doc-id makes the final spool state equal the batch answer
-    even though a word's count is written once per micro-batch it changes."""
+    even though a word's count is written once per micro-batch it changes.
+    Each micro-batch logs its batch_id with what it committed, so a batch
+    replayed after a lost commit record is logged again under its id."""
+    import logging
+
+    caplog.set_level(
+        logging.INFO,
+        logger="apache_beam_java_firestore_batch_dataflow_spark.streaming.sink",
+    )
     src = str(tmp_path / "text")
     spool = str(tmp_path / "spool")
     ckpt = str(tmp_path / "ckpt")
@@ -158,12 +167,27 @@ def test_streaming_firestore_sink(spark, tmp_path):
         .load(src)
     )
     config = FirestoreSinkConfig(project_id="p", collection_path="stream")
-    writer = stream_word_counts_writer(
-        count_words(lines), config, fake_client_factory(spool), ckpt
-    )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination(120)
 
+    def run_once():
+        writer = stream_word_counts_writer(
+            count_words(lines), config, fake_client_factory(spool), ckpt
+        )
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination(120)
+        return q
+
+    def logged_batches():
+        # (batch_id, documents, commits) per logged micro-batch
+        return [
+            tuple(map(int, re.fullmatch(
+                r"batch (\d+): committed (\d+) documents in (\d+) commits",
+                r.getMessage(),
+            ).groups()))
+            for r in caplog.records
+            if r.name.endswith("streaming.sink")
+        ]
+
+    q = run_once()
     state = read_fake_firestore_state(spool)["stream"]
     assert {k: v["count"] for k, v in state.items()} == {
         "hi": 5,
@@ -172,6 +196,26 @@ def test_streaming_firestore_sink(spark, tmp_path):
         "bob": 2,
     }
     assert len(q.recentProgress) >= 2  # two micro-batches (one per file)
+    # one file per batch, in either order: a.txt writes hi, there; b.txt
+    # hi, sue, bob
+    first = logged_batches()
+    assert [b for b, _, _ in first] == [0, 1]
+    assert sorted(docs for _, docs, _ in first) == [2, 3]
+    assert all(commits >= 1 for _, _, commits in first)
+
+    # Losing batch 1's commit record makes Spark replay it under the same id.
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    caplog.clear()
+    run_once()
+    assert logged_batches() == first[1:]
+    state = read_fake_firestore_state(spool)["stream"]
+    assert {k: v["count"] for k, v in state.items()} == {
+        "hi": 5,
+        "there": 1,
+        "sue": 2,
+        "bob": 2,
+    }
 
 
 def test_kafka_to_firestore_end_to_end(spark, tmp_path):
